@@ -13,21 +13,26 @@ rounds on any graph and O(log n) in practice:
 - large-star: for every node u, connect every strictly-larger neighbor v > u
   to the minimum of u's neighborhood-with-self m(u). Keeps the graph's
   component structure, strictly reduces large-id edges.
-- small-star: for every node u, connect every neighbor v <= u (and u itself)
-  to m(u). Contracts stars.
+- small-star: for every node v, connect every smaller neighbor u < v (and v
+  itself) to the smallest of them. Contracts stars.
 
-Both phases are pure DataFrame ops (groupBy + min + join); the driver loop
-checkpoints each iteration (``localCheckpoint``) to sever the growing lineage
-— without it the plan doubles every round and the job dies at scale long
-before the data does. Convergence = edge set stable under large-star; the
-fixpoint graph is a forest of depth-1 stars whose centers are the component
-minima. Node ids are conv_id strings; "min" is lexicographic and
-deterministic, so labels are reproducible run-to-run.
+Each phase is ONE window pass, ``min(..) over (partition by node)``, over the
+edge rows: no join, no broadcast, no collected neighbor list (a hub's window
+rows spill; an array must fit in memory). The loop checkpoints each round
+(``localCheckpoint``) to sever the growing lineage — without it the plan
+doubles every round and the job dies at scale long before the data does.
+
+Convergence is one aggregate over the checkpointed edges: stop once they form
+a min-centred star forest, i.e. every ``dst`` is a leaf (exactly one ``src``,
+and no edge's ``src``). Disjoint ``src``/``dst`` sets alone are not enough:
+{a–c, b–c} passes that test but labels c twice. Exhausting
+``cc_max_iterations`` raises. Node ids are conv_id strings; "min" is
+lexicographic and deterministic, so labels are reproducible run-to-run.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 from ..config import DEFAULT_CONFIG, MatchConfig
 
@@ -40,38 +45,31 @@ def _canonical(edges: DataFrame) -> DataFrame:
     ).distinct()
 
 
-def _large_star(edges: DataFrame) -> DataFrame:
-    """(u,v) both directions; emit (v, min(N(u) ∪ u)) for v > u."""
-    bidir = edges.select("src", "dst").unionAll(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+def _star_round(edges: DataFrame) -> DataFrame:
+    """One large-star then one small-star over canonical edges (src < dst)."""
+    bidir = edges.unionAll(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    # large-star: (m(u), v) for every neighbor v > u; m(u) <= u < v, so canonical
+    large = (
+        bidir.withColumn("m", F.least("src", F.min("dst").over(Window.partitionBy("src"))))
+        .where(F.col("dst") > F.col("src"))
+        .select(F.col("m").alias("src"), "dst")
     )
-    m = bidir.groupBy("src").agg(F.min("dst").alias("m"))
-    m = m.select("src", F.least("src", "m").alias("m"))
-    joined = bidir.join(m, "src")
+    # small-star: v's smallest neighbor w takes v and v's other smaller neighbors
+    small = large.withColumn("w", F.min("src").over(Window.partitionBy("dst")))
     return (
-        joined.where(F.col("dst") > F.col("src"))
-        .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
+        small.select(F.col("w").alias("src"), F.explode(F.array("src", "dst")).alias("dst"))
         .where(F.col("src") != F.col("dst"))
         .distinct()
-        .select(F.least("src", "dst").alias("src"), F.greatest("src", "dst").alias("dst"))
     )
 
 
-def _small_star(edges: DataFrame) -> DataFrame:
-    """Orient edges large->small; emit (v, m(u)) for v in N(u) ∪ {u}."""
-    oriented = edges.select(
-        F.greatest("src", "dst").alias("src"), F.least("src", "dst").alias("dst")
+def _is_star_forest(edges: DataFrame) -> bool:
+    """True iff canonical edges are min-centred stars: every dst is a leaf."""
+    nodes = edges.select(F.posexplode(F.array("src", "dst")).alias("is_dst", "node"))
+    per_node = nodes.groupBy("node").agg(
+        F.max("is_dst").alias("is_dst"), F.count(F.lit(1)).alias("degree")
     )
-    m = oriented.groupBy("src").agg(F.min("dst").alias("m"))
-    joined = oriented.join(m, "src")
-    out = joined.select(F.col("dst").alias("src"), F.col("m").alias("dst")).unionAll(
-        joined.select("src", "m")
-    )
-    return (
-        out.where(F.col("src") != F.col("dst"))
-        .select(F.least("src", "dst").alias("src"), F.greatest("src", "dst").alias("dst"))
-        .distinct()
-    )
+    return per_node.where("is_dst = 1 AND degree > 1").isEmpty()
 
 
 def connected_components(
@@ -81,31 +79,30 @@ def connected_components(
 
     cluster_id is the lexicographically-smallest member of the component.
     Singleton nodes don't appear; callers union isolated records back with
-    cluster_id = own conv_id (see ``assign_clusters``).
+    cluster_id = own conv_id (see ``assign_clusters``). Raises RuntimeError
+    when ``cc_max_iterations`` rounds end short of a star forest.
     """
     cfg = config or DEFAULT_CONFIG
     e = _canonical(edges)
     if checkpoint:
         e = e.localCheckpoint()
 
-    n_prev = e.count()
-    for _ in range(cfg.cc_max_iterations):
-        e2 = _small_star(_large_star(e))
+    rounds = 0
+    while not _is_star_forest(e):
+        if rounds == cfg.cc_max_iterations:
+            raise RuntimeError(
+                f"connected components did not converge in {rounds} rounds: "
+                f"{e.count()} edges are still not a star forest (cc_max_iterations)"
+            )
+        e = _star_round(e)
         if checkpoint:
-            e2 = e2.localCheckpoint()
-        # convergence: both sides are distinct sets, so equal counts plus an
-        # empty one-way difference proves set equality (one anti-join, not two)
-        n2 = e2.count()
-        changed = 1 if n2 != n_prev else e2.exceptAll(e).limit(1).count()
-        e, n_prev = e2, n2
-        if changed == 0:
-            break
+            e = e.localCheckpoint()
+        rounds += 1
 
-    # fixpoint: canonical star edges are (src=component-min, dst=member)
+    # star forest: edges are (src=component-min, dst=member), each dst once
     labels = e.select(F.col("src").alias("cluster_id"), F.col("dst").alias("conv_id"))
-    roots = e.select(F.col("src").alias("cluster_id")).distinct() \
-        .select("cluster_id", F.col("cluster_id").alias("conv_id"))
-    return labels.unionByName(roots).distinct()
+    roots = e.select(F.col("src").alias("cluster_id"), F.col("src").alias("conv_id")).distinct()
+    return labels.unionByName(roots)
 
 
 def assign_clusters(records: DataFrame, components: DataFrame) -> DataFrame:

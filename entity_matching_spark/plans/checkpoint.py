@@ -31,6 +31,7 @@ every stage must be independently resumable.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import time
@@ -105,6 +106,11 @@ class StageCheckpointer:
         re-reads the materialized output, verifies the recomputed fingerprint
         equals the observed one, and records the per-partition breakdown.
         """
+        # the overwrite below clobbers the previous run's files before any
+        # check can raise, so drop its manifest first: a failed write must
+        # leave the stage incomplete, never vouched for by a stale manifest
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(self._manifest_path(stage))
         path = self.stage_dir(stage)
         obs = Observation()
         # Empty-string values in a STRING partition column do not round-trip:

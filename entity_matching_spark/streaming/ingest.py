@@ -34,9 +34,13 @@ so the same code serves both backfill and tail-following.
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import DEFAULT_CONFIG, MatchConfig
+
+_log = logging.getLogger(__name__)
 
 TRANSCRIPT_DDL = (
     "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
@@ -286,9 +290,11 @@ def _compaction_manifest(spark: SparkSession, comp_base: str) -> dict | None:
     if _fs_exists(spark, path):
         try:
             return json.loads(_fs_read_text(spark, path))
-        except Exception:
+        except Exception as exc:
             # zero/partial/checksum-corrupt pointer: recover from the inner
             # copies (any unreadable pointer state resolves the same way)
+            _log.warning("compaction pointer %s unreadable (%s); recovering "
+                         "from the h=* copies", path, type(exc).__name__)
             pointer_torn = True
     fs, base, _ = _fs(spark, comp_base)
     if not fs.exists(base):
@@ -309,12 +315,15 @@ def _compaction_manifest(spark: SparkSession, comp_base: str) -> dict | None:
             continue
         try:
             man = json.loads(_fs_read_text(spark, inner))
-        except Exception:
+        except Exception as exc:
             # same breadth as the pointer read above: the inner copies are
             # written non-atomically too, so a compactor crash can leave a
             # torn/checksum-corrupt copy that surfaces as a Py4J-wrapped
             # IOException, not ValueError — skip it and recover from an
-            # older generation (or hit the fail-loud floor below)
+            # older generation (or hit the fail-loud floor below); logged,
+            # since an infra failure lands here too
+            _log.warning("skipping unreadable compaction copy %s (%s)",
+                         inner, type(exc).__name__)
             continue
         if best is None or man["h"] > best["h"]:
             best = man

@@ -85,6 +85,26 @@ class TestCheckpointer:
             # non-partitioned '' values are data, not directory names — fine
             assert ck.write("s_flat", df, params_hash="h")["output_rows"] == 20
 
+    def test_failed_rewrite_invalidates_previous_manifest(self, spark, tmp_path):
+        """Run A completes; run B overwrites the stage directory and then
+        fails; run C (A's params again) must recompute the stage, not resume
+        from the files B clobbered under A's surviving manifest."""
+        good = spark.range(20).selectExpr("id AS x", "IF(id % 2 = 0, 'a', 'b') AS part")
+        bad = spark.range(7).selectExpr("id AS x", "IF(id % 5 = 0, '', 'c') AS part")
+        StageCheckpointer(str(tmp_path), run_id="A").write(
+            "s_x", good, params_hash="h1", partition_by=["part"]
+        )
+        with pytest.raises(RuntimeError, match="empty-string"):
+            StageCheckpointer(str(tmp_path), run_id="B").write(
+                "s_x", bad, params_hash="h2", partition_by=["part"]
+            )
+        run_c = StageCheckpointer(str(tmp_path), run_id="C")
+        assert run_c.manifest("s_x") is None
+        assert not run_c.is_complete("s_x", "h1")
+        m = run_c.write("s_x", good, params_hash="h1", partition_by=["part"])
+        assert m["output_rows"] == 20 and run_c.is_complete("s_x", "h1")
+        assert run_c.read(spark, "s_x").count() == 20
+
     def test_manifest_on_disk(self, spark, tmp_path):
         ck = StageCheckpointer(str(tmp_path), run_id="t")
         ck.write("s_x", spark.range(5), params_hash="h")

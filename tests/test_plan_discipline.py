@@ -181,6 +181,19 @@ class TestDedupPlans:
         assert not re.search(r"\(\d+\) Generate", plan), plan
 
 
+class TestClusterPlan:
+    def test_star_round_no_join_no_broadcast(self, spark):
+        # one large-star/small-star round is two window passes plus the
+        # closing distinct: three exchanges, no join and no broadcast
+        from entity_matching_spark.operators.cluster import _canonical, _star_round
+
+        path = [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(40)]
+        edges = _canonical(spark.createDataFrame(path, "a string, b string")).localCheckpoint()
+        plan = _executed_plan(_star_round(edges))
+        assert not re.search(r"\(\d+\) \w*Join", plan), plan
+        assert not re.search(r"\(\d+\) BroadcastExchange", plan), plan
+        assert len(re.findall(r"\(\d+\) Exchange", plan)) == 3, plan
+
 
 class TestScanPruning:
     def test_probe_filter_pushed_to_parquet_scan(self, spark, tmp_path):

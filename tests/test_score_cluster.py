@@ -142,6 +142,27 @@ class TestConnectedComponents:
         c2 = sorted(map(tuple, connected_components(edges).collect()))
         assert c1 == c2
 
+    def test_star_forest_predicate(self, spark):
+        """Convergence holds only when every dst is a leaf: disjoint src/dst
+        sets are not enough ({a-c, b-c} would label c twice)."""
+        from entity_matching_spark.operators.cluster import _is_star_forest
+
+        def forest(rows):
+            return _is_star_forest(spark.createDataFrame(rows, "src string, dst string"))
+
+        assert forest([("a", "b"), ("a", "c"), ("a", "d"), ("e", "f")])
+        assert forest([])
+        assert not forest([("a", "b"), ("b", "c")])  # chain: b is src and dst
+        assert not forest([("a", "c"), ("b", "c")])  # two-centre leaf
+
+    def test_non_convergence_raises(self, spark):
+        """Running out of rounds fails loud instead of returning labels that
+        can put one node in two clusters."""
+        path = [(f"n{i:02d}", f"n{i+1:02d}") for i in range(40)]
+        edges = spark.createDataFrame(path, ["conv_id_a", "conv_id_b"])
+        with pytest.raises(RuntimeError, match=r"did not converge in 1 rounds: \d+ edges"):
+            connected_components(edges, MatchConfig(cc_max_iterations=1)).collect()
+
 
 class TestEndToEnd:
     """The headline gate: pairwise F1 >= 0.99 vs labels (BASELINE.json)."""

@@ -681,7 +681,7 @@ class TestCompactionSafety:
         assert _compaction_manifest(spark, wd + "/keys_compacted") == good
         assert _read_corpus_table(spark, wd, "keys", exclude_batch=-1).count() == n
 
-    def test_torn_pointer_without_inner_copy_fails_loud(self, spark, tmp_path):
+    def test_torn_pointer_without_inner_copy_fails_loud(self, spark, tmp_path, caplog):
         """A torn MANIFEST.json whose h=* directories carry NO recoverable
         _COMPACTION.json (e.g. written by a pre-atomic release) proves a
         cutover was attempted — raw partitions may already be pruned — so
@@ -707,11 +707,19 @@ class TestCompactionSafety:
         # ValueError. Recovery must skip the unreadable copy and still land
         # on the designed fail-loud floor, not propagate an opaque Java
         # error from the path built to heal exactly this crash.
-        for inner in glob.glob(base + "/h=*/_COMPACTION.json"):
+        inners = glob.glob(base + "/h=*/_COMPACTION.json")
+        for inner in inners:
             with open(inner, "r+") as f:
                 f.write("X")  # flip the first byte; .crc now stale
-        with pytest.raises(IOError, match="never-compacted"):
-            _compaction_manifest(spark, base)
+        with caplog.at_level("WARNING", logger="entity_matching_spark.streaming.ingest"):
+            with pytest.raises(IOError, match="never-compacted"):
+                _compaction_manifest(spark, base)
+        # every skipped copy (and the torn pointer) is logged with its path
+        # and exception class, so a fall-back to an older generation shows
+        logged = [r.getMessage() for r in caplog.records]
+        assert any("MANIFEST.json unreadable (" in m for m in logged), logged
+        skipped = [m for m in logged if m.startswith("skipping unreadable compaction copy")]
+        assert len(skipped) == len(inners) and all("Error" in m for m in skipped), logged
         for inner in glob.glob(base + "/h=*/_COMPACTION.json"):
             os.remove(inner)  # old-format directory: no recovery anchor
         with pytest.raises(IOError, match="never-compacted"):
